@@ -458,7 +458,7 @@ def test_footer_estimator_early_exit_reads_one_footer(tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import tmdb_sync_spark.functions.winnow as W
+    import tmdb_sync_spark.io as io
 
     d = tmp_path / "many_files"
     d.mkdir()
@@ -485,22 +485,22 @@ def test_footer_estimator_early_exit_reads_one_footer(tmp_path, monkeypatch):
         return real(path, *a, **kw)
 
     monkeypatch.setattr(pq, "ParquetFile", counting)
-    W._TEXT_BYTES_CACHE.clear()
+    io._FOOTERS.clear()
     # cap below the first file's text bytes → exactly ONE footer read,
     # and the returned lower bound already proves the cap binds
-    got = W._text_bytes_from_footer(str(d), byte_cap=per_file[0] // 2)
+    got = io.table_footer(str(d)).text_bytes(cap=per_file[0] // 2)
     assert len(opened) == 1
     assert got is not None and got >= per_file[0] // 2
 
     opened.clear()
-    W._TEXT_BYTES_CACHE.clear()
+    io._FOOTERS.clear()
     # uncapped → every footer read, full total
-    got_all = W._text_bytes_from_footer(str(d))
+    got_all = io.table_footer(str(d)).text_bytes()
     assert len(opened) == 5
     assert got_all == sum(per_file)
 
     # differently-capped calls never alias through the cache
-    W._TEXT_BYTES_CACHE.clear()
-    low = W._text_bytes_from_footer(str(d), byte_cap=per_file[0] // 2)
-    full = W._text_bytes_from_footer(str(d))
+    io._FOOTERS.clear()
+    low = io.table_footer(str(d)).text_bytes(cap=per_file[0] // 2)
+    full = io.table_footer(str(d)).text_bytes()
     assert full == sum(per_file) and low <= full

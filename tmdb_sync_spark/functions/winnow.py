@@ -55,12 +55,10 @@ empty, so an unguarded short text would fabricate a junk fingerprint
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tmdb_sync_spark.io import parallel_table
+from tmdb_sync_spark.io import parallel_table, table_footer
 from tmdb_sync_spark.registry import register
 
 WINNOW_K = 12        # k-gram width (chars)
@@ -74,7 +72,7 @@ MIN_SHARED_FPS = 3   # pair detection threshold
 # (extents aggregate, df-cap window, pair aggregate, final sort) carries
 # rows bounded by the corpus's WINNOWED FINGERPRINT volume — estimable
 # as text_bytes × 2/(W+1) straight from the parquet FOOTER (an O(1)
-# metadata read at any scale, cached per content stamp). Partition
+# metadata read at any scale, io.table_footer). Partition
 # count = est_fp_rows / this constant, CAPPED at the session setting: a
 # 100 TB corpus estimate exceeds any session count, so the plan shape at
 # scale is untouched — only small corpora stop scheduling near-empty
@@ -82,57 +80,6 @@ MIN_SHARED_FPS = 3   # pair detection threshold
 # warm interleaved A/B: wn_substring_overlap 1.52 → 1.22 s,
 # wn_verify_spans 3.11 → 2.93 s (every interleaved pair won).
 DETECT_FP_ROWS_PER_TASK = 50_000
-
-# (path, mtime_ns, size, byte_cap) -> text-column uncompressed bytes
-# (footer); values at or past a byte_cap are LOWER BOUNDS (early exit)
-_TEXT_BYTES_CACHE: dict[tuple, int | None] = {}
-
-
-def _text_bytes_from_footer(path: str, byte_cap: int | None = None) -> int | None:
-    """Uncompressed byte size of the ``text`` column from parquet footer
-    metadata — no data read. ``None`` when the footer (or column) is
-    unavailable; callers then keep the session shuffle shape.
-
-    ``byte_cap`` is the early-exit bound (r12 verdict #4 → r13 #6): the
-    only consumer compares the estimate against a partition cap, so once
-    the running total REACHES the cap the remaining footers cannot
-    change the answer — at 100 TB (thousands of files) the loop would
-    otherwise be an O(files) driver-side metadata stall just to learn
-    the cap binds (usually file 1 settles it). The returned value is a
-    lower bound when it equals/exceeds ``byte_cap``; the cache key
-    carries the cap so differently-capped callers never alias."""
-    files = [path]
-    if os.path.isdir(path):
-        files = sorted(
-            e.path for e in os.scandir(path) if e.name.endswith(".parquet")
-        )
-        if not files:
-            return None
-    try:
-        st = os.stat(files[0])
-        key = (files[0], len(files), st.st_mtime_ns, st.st_size, byte_cap)
-    except OSError:
-        return None
-    if key in _TEXT_BYTES_CACHE:
-        return _TEXT_BYTES_CACHE[key]
-    total = 0
-    try:
-        import pyarrow.parquet as pq
-
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    c = g.column(ci)
-                    if c.path_in_schema == "text":
-                        total += c.total_uncompressed_size
-            if byte_cap is not None and total >= byte_cap:
-                break    # the cap binds — later footers can't change it
-    except Exception:
-        total = None    # odd footer → session shape, not an error
-    _TEXT_BYTES_CACHE[key] = total
-    return total
 
 
 def _detection_parts(spark: SparkSession, sf_dir: str) -> int | None:
@@ -149,8 +96,8 @@ def _detection_parts(spark: SparkSession, sf_dir: str) -> int | None:
     cap_bytes = -(
         -(session_parts * DETECT_FP_ROWS_PER_TASK * (WINNOW_W + 1)) // 2
     )
-    text_bytes = _text_bytes_from_footer(
-        f"{sf_dir}/documents.parquet", byte_cap=cap_bytes
+    text_bytes = table_footer(f"{sf_dir}/documents.parquet").text_bytes(
+        cap=cap_bytes
     )
     if text_bytes is None:
         return None

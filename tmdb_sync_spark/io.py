@@ -4,85 +4,142 @@ Tables (TESTDATA.md): region nation customer supplier part orders lineitem
 events documents embeddings — one parquet file per table under an ``sf_dir``.
 
 Reads are plain ``spark.read.parquet`` so Catalyst keeps full pushdown /
-pruning freedom; nothing is cached here (operators decide).
+pruning freedom; no data is cached here (operators decide), only footer
+metadata (:func:`table_footer`) and view registration.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, LongType
 
+from tmdb_sync_spark.session import pin_session
+from tmdb_sync_spark.util import file_fingerprint
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# (path, mtime_ns, size) -> whether events' ts is TIMESTAMP(NANOS)
-_EVENTS_NANOS: dict[tuple, bool] = {}
+# (path, util.file_fingerprint(path)) -> that table's footer walk. ONE
+# cache for every footer-derived answer: the fingerprint folds in the
+# part count, mtimes and sizes, so adding a part or regenerating the
+# testdata in place starts a fresh walk.
+_FOOTERS: dict[tuple, "TableFooter"] = {}
 
 
-def _events_ts_is_nanos(path: str) -> bool:
-    """Footer sniff: does this events table encode ``ts`` as
-    TIMESTAMP(NANOS)? Cached per (path, mtime, size) so a driver-side
-    testdata regeneration is re-sniffed."""
-    f = path
-    if os.path.isdir(path):
-        parts = sorted(
-            e.path for e in os.scandir(path) if e.name.endswith(".parquet")
-        )
-        if parts:
-            f = parts[0]
-    try:
-        st = os.stat(f)
-        key = (f, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return False          # let the Spark read produce the real error
-    cached = _EVENTS_NANOS.get(key)
-    if cached is None:
+class TableFooter:
+    """Parquet footer metadata of one table (a file or a dir of parts),
+    read lazily in sorted part order — no data is read.
+
+    - ``ts_nanos``: the first footer's ``ts`` is TIMESTAMP(NANOS).
+    - ``rows(cap)`` / ``text_bytes(cap)``: row total / uncompressed
+      ``text`` column bytes over the parts. The walk stops once the
+      running total reaches ``cap``, so the answer is exact below the
+      cap and a lower bound at or above it: a caller that only compares
+      against the cap learns it binds from the first footer instead of
+      an O(files) driver-side stall over a 100 TB table. Footers already
+      read stay read, so a later uncapped call resumes the walk.
+
+    Unreadable footers give ``ts_nanos=False`` and ``None`` totals: the
+    Spark read that follows raises the real error, and sizing callers
+    keep the session shape.
+    """
+
+    def __init__(self, files: list[str]) -> None:
+        self._files = files
+        self._read = 0
+        self._totals = [0, 0]   # rows, text bytes over the parts read
+        self._nanos = False
+        self._broken = not files
+        self._lock = threading.Lock()
+
+    def _done(self, i: int | None, cap: int | None) -> bool:
+        if self._broken or self._read == len(self._files):
+            return True
+        if not self._read:
+            return False         # the schema answer needs the first footer
+        return i is None or (cap is not None and self._totals[i] >= cap)
+
+    def _read_next(self) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         try:
-            cached = pq.read_schema(f).field("ts").type == pa.timestamp("ns")
-        except Exception:
-            cached = False    # unreadable/odd footer → Spark's error wins
-        _EVENTS_NANOS[key] = cached
-    return cached
+            pf = pq.ParquetFile(self._files[self._read])
+            if not self._read:
+                schema = pf.schema_arrow
+                self._nanos = "ts" in schema.names and (
+                    schema.field("ts").type == pa.timestamp("ns"))
+            md = pf.metadata
+            self._totals[0] += md.num_rows
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                for ci in range(g.num_columns):
+                    c = g.column(ci)
+                    if c.path_in_schema == "text":
+                        self._totals[1] += c.total_uncompressed_size
+            self._read += 1
+        except (OSError, pa.ArrowException):
+            self._broken = True
+
+    def _walk(self, i: int | None, cap: int | None):
+        """Read footers until total ``i`` reaches ``cap`` (all of them
+        when ``cap`` is None; only the first when ``i`` is None) and
+        answer from what was read."""
+        with self._lock:
+            while not self._done(i, cap):
+                self._read_next()
+            if i is None:
+                return self._read > 0 and self._nanos
+            return None if self._broken else self._totals[i]
+
+    @property
+    def ts_nanos(self) -> bool:
+        return self._walk(None, None)
+
+    def rows(self, cap: int | None = None) -> int | None:
+        return self._walk(0, cap)
+
+    def text_bytes(self, cap: int | None = None) -> int | None:
+        return self._walk(1, cap)
+
+
+def table_footer(path: str) -> TableFooter:
+    """The cached footer walk of the parquet table at ``path``."""
+    key = (path, file_fingerprint(path))
+    walk = _FOOTERS.get(key)
+    if walk is None:
+        files = [path]
+        if os.path.isdir(path):
+            files = sorted(
+                e.path for e in os.scandir(path)
+                if e.name.endswith(".parquet")
+            )
+        walk = _FOOTERS.setdefault(key, TableFooter(files))
+    return walk
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # Query semantics (date_format/year rendering, timestamp arithmetic)
-    # assume UTC naive-timestamp parity with the reference and the DuckDB
-    # oracle (SURVEY §7 hard-part 7). The driver's session may not pin a
-    # zone — enforce it at every table access (runtime-settable conf).
-    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        # events.parquet's ts encoding varies across driver testdata
-        # versions: TIMESTAMP(NANOS) (which the Spark parquet reader
-        # rejects — read nanos as long, truncate to micros) or plain
-        # TIMESTAMP(MICROS) (reads as TIMESTAMP_NTZ). Normalize both to
-        # session-zone TimestampType under the UTC session pinned above —
-        # the same naive-UTC values DuckDB's reader produces, so oracle
-        # comparisons line up exactly.
-        # nanosAsLong is set ONLY when the footer actually says NANOS: it
-        # is session-global and consulted again at query EXECUTION, so it
-        # cannot be scoped set-read-restore (the later action would see
-        # the restored value and fail) — but when the encoding is MICROS
-        # it need never be touched, so a session that never meets a nanos
-        # table keeps default parquet timestamp semantics everywhere.
-        path = f"{sf_dir}/{name}.parquet"
-        if _events_ts_is_nanos(path):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        return df.withColumn("ts", events_ts_norm(df.schema["ts"].dataType))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    # events.parquet's ts encoding varies across driver testdata
+    # versions: TIMESTAMP(NANOS) (read as long under nanosAsLong,
+    # truncated to micros) or plain TIMESTAMP(MICROS) (reads as
+    # TIMESTAMP_NTZ). Both normalize to TimestampType under the pinned
+    # UTC session — the naive-UTC values DuckDB's reader produces.
+    events = name == "events"
+    pin_session(spark, nanos=events and table_footer(path).ts_nanos)
+    df = spark.read.parquet(path)
+    if not events:
+        return df
+    return df.withColumn("ts", events_ts_norm(df.schema["ts"].dataType))
 
 
 def events_ts_norm(raw_type: DataType) -> Column:
@@ -140,47 +197,6 @@ def broadcast_if_dim(
     return df
 
 
-# (path, mtime_ns, size) -> footer row count (O(1) metadata read)
-_TABLE_ROWS: dict[tuple, int | None] = {}
-
-
-def table_rows_from_footer(path: str) -> int | None:
-    """Row count from parquet footer metadata (no data read), cached per
-    content stamp; ``None`` when unreadable — callers fall back to the
-    session default."""
-    f = path
-    if os.path.isdir(path):
-        parts = sorted(
-            e.path for e in os.scandir(path) if e.name.endswith(".parquet")
-        )
-        if not parts:
-            return None
-        f = parts[0]
-        many = len(parts) > 1
-    else:
-        many = False
-    try:
-        st = os.stat(f)
-        key = (f, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return None
-    if key not in _TABLE_ROWS:
-        try:
-            import pyarrow.parquet as pq
-
-            n = pq.ParquetFile(f).metadata.num_rows
-            if many:
-                # multi-file dir: first footer is a LOWER bound; good
-                # enough for a partition-count floor, and one footer
-                # read keeps this O(1) in file count (same rationale as
-                # winnow's capped footer walk)
-                n = None
-        except Exception:
-            n = None
-        _TABLE_ROWS[key] = n
-    return _TABLE_ROWS[key]
-
-
 def parallel_table(
     spark: SparkSession, sf_dir: str, name: str,
     rows_per_task: int | None = None,
@@ -205,7 +221,8 @@ def parallel_table(
     a handful of rows per task is worth a core."""
     parts = spark.sparkContext.defaultParallelism
     if rows_per_task is not None:
-        rows = table_rows_from_footer(f"{sf_dir}/{name}.parquet")
+        rows = table_footer(f"{sf_dir}/{name}.parquet").rows(
+            cap=parts * rows_per_task)
         if rows is not None:
             parts = max(1, min(parts, -(-rows // rows_per_task)))
     return table(spark, sf_dir, name).repartition(parts)
@@ -230,8 +247,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 
     Idempotent per (session, sf_dir, table-content): a repeated call
     with unchanged table files is a ten-``os.stat`` no-op."""
-    from tmdb_sync_spark.util import file_fingerprint
-
     fps = tuple(
         file_fingerprint(f"{sf_dir}/{t}.parquet") for t in TABLES
     )

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tmdb_sync_spark.registry import register_retired
+from tmdb_sync_spark.session import stream_session
 
 
 def dedup_within_watermark(
@@ -135,20 +136,10 @@ def run_dedup_stream(
 
         _shutil.rmtree(out)
 
-    sub = spark.newSession()
-    sub.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"),
-    )
-    sub.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    # telemetry below sums over recentProgress, which Spark caps at
-    # numRecentProgressUpdates (default 100) — a >100-micro-batch drain
-    # would silently undercount input_rows/batches/evictions
-    sub.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    # pin only the PRIVATE sub-session to UTC (event-time parsing);
-    # this helper writes files and returns paths, so it has no business
-    # mutating the caller's session timezone (review finding)
-    sub.conf.set("spark.sql.session.timeZone", "UTC")
+    # the stream runs on a private pinned sub-session (UTC event-time
+    # parsing, streaming confs); this helper writes files and returns
+    # paths, so the caller's session is not touched
+    sub = stream_session(spark)
 
     reader = sub.readStream.schema(schema)
     if max_files_per_trigger is not None:

@@ -34,9 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from tmdb_sync_spark.io import _events_ts_is_nanos, events_ts_norm, table
+from tmdb_sync_spark.io import events_ts_norm, table, table_footer
 from tmdb_sync_spark.operators.scalars import NAN_VALUE_SQL, nan_to_null
 from tmdb_sync_spark.registry import register
+from tmdb_sync_spark.session import pin_session, stream_session
 from tmdb_sync_spark.util import file_fingerprint, scratch_dir
 
 # NaN-measure convention: operators.scalars.NAN_VALUE_SQL, interpolated
@@ -61,61 +62,16 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP(MICROS)-as-NTZ depending on the testdata generation) and is
     normalized with the same expression the batch reader uses.
 
-    The stream is built on its OWN ``newSession()`` (shared SparkContext,
-    session-scoped SQLConf), carrying the two streaming confs:
-
-    - ``spark.sql.shuffle.partitions`` =
-      ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` (default 8): every
-      micro-batch loads and commits one state store PER shuffle
-      partition — a fixed per-trigger cost — so the right number tracks
-      keyed-state cardinality, not the batch-side default. Measured
-      in-session at sf0.1: 32→8 cuts each window query ~30%.
-    - no-data micro-batches off: these finite runs emit in complete /
-      NoTimeout-append modes, which never need the watermark-advance
-      batch (~0.2 s/query of state-store reloads saved).
-
-    Session isolation replaces the previous set/restore-under-lock:
-    concurrent streaming runs no longer serialize on a conf lock, and a
-    batch query planned by another driver thread can never observe the
-    streaming values.
+    The stream runs on its own ``session.stream_session`` sub-session
+    (streaming confs, UTC and nanosAsLong pinned on every call, memo hit
+    or not), so a batch query planned by another driver thread never
+    observes the streaming values. The caller's session is pinned too:
+    the streaming result is read back and collected on it, and an
+    unpinned zone would render the window timestamps in local time.
     """
-    # The CALLER's session still needs the UTC pin: the streaming result
-    # is read back and collected on it (spark.read.parquet(out)), and a
-    # driver-provided session without a pinned zone would render the
-    # window timestamps in local time, off from the naive-UTC oracle.
-    # Previously table(spark, ...) here had that side effect; keep it
-    # explicitly now that the stream builds on the sub-session.
-    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    sub = spark.newSession()
-    sub.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8"),
-    )
-    sub.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    # State-store provider knob. Default = Spark's in-heap HDFS-backed
-    # store: fastest at the bench's state sizes (≤ ~200k rows). At the
-    # 64× events ramp (~13M pre-agg state rows) the in-heap store hits
-    # the single-JVM heap wall — 32 state partitions OOMed outright —
-    # while RocksDB (off-heap, the production choice for large state)
-    # ran it at any partition count and ~10% faster at 8
-    # (COVERAGE.md round-6 ramp notes). Set to 'rocksdb' when keyed
-    # state per executor outgrows the heap.
-    if os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER", "").lower() == (
-        "rocksdb"
-    ):
-        sub.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    # nanosAsLong must be pinned on the SUB session before its reads —
-    # table() used to do it as a side effect; with the schema memo the
-    # conf set happens explicitly so a memo hit still applies it (the
-    # footer sniff itself is cached per content stamp in io.py)
     events_path = os.path.join(sf_dir, "events.parquet")
-    if _events_ts_is_nanos(events_path):
-        sub.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pin_session(spark)
+    sub = stream_session(spark, nanos=table_footer(events_path).ts_nanos)
     schema_key = (events_path, file_fingerprint(events_path))
     raw_schema = _STREAM_SCHEMA_CACHE.get(schema_key)
     if raw_schema is None:
@@ -149,11 +105,10 @@ def _run_to_parquet(agg: DataFrame, mode: str) -> str:
     writes), unlike the memory sink which collects into the driver; the
     checkpoint dir bounds replay exactly as on an unbounded stream.
 
-    The streaming confs (state shuffle partitions, no-data micro-batch)
-    live on the plan's own sub-session — see ``_events_stream`` — so this
-    runner needs no conf set/restore and no lock: concurrent streaming
-    runs execute genuinely in parallel and never leak conf into batch
-    planning on the main session.
+    The streaming confs live on the plan's own sub-session (see
+    ``_events_stream``), so this runner needs no conf set/restore and no
+    lock: concurrent streaming runs execute in parallel and never leak
+    conf into batch planning on the main session.
     """
     out = scratch_dir("st_out_")
     ckpt = scratch_dir("st_ckpt_")
